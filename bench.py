@@ -75,9 +75,8 @@ _HEADLINE = [
     "pii_redaction_stats",
     "doc_repetition_stats",
     "corpus_mixture_sample",
-    # round 3: hash-certified signature variants, incremental dedup
-    # store, training-set assembly, iterative graph
-    "dedup_minhash_lsh_checkable",
+    # round 3: incremental dedup store, training-set assembly,
+    # iterative graph
     "dedup_minhash_incremental",
     "sequence_pack_blocks",
     "sequence_pack_greedy",
@@ -120,8 +119,6 @@ _HEADLINE = [
     "range_frame_trailing_week",
     # round 3: array higher-order-function battery
     "array_hof_battery",
-    # round 3: end-to-end hash-certified MinHash clustering
-    "dedup_minhash_clusters_checkable",
     # round 3: experiment analytics
     "cohort_retention_matrix",
     "ab_test_ztest",
@@ -496,6 +493,46 @@ def comparability_downgrade(
     return comparable, None, None
 
 
+def write_detail(
+    verbose: dict, detail_path: str, sf_val, cpus: int, prev_cpus: int | None
+) -> str | None:
+    """Write a comparable run's per-query receipts; return the name of
+    the last file written (None if none was).
+
+    The per-SF, per-core-count file ``BENCH_DETAIL_sf<sf>_c<cpus>.json``
+    beside ``detail_path`` is ALWAYS written (r12 VERDICT item 7: the
+    c8 scaling run overwrote the c32 detail and erased the per-query
+    scaling evidence). The main ``detail_path`` — the next run's
+    regression baseline — is only refreshed by a run at ITS scale
+    factor and core count, so a verify/debug run at another SF or a
+    low-core scaling run cannot clobber it. With no main detail yet,
+    any run may establish it."""
+    sf_of_record = sf_val
+    try:
+        with open(detail_path) as fh:
+            sf_of_record = json.load(fh).get("sf", sf_val)
+    except (OSError, ValueError):
+        pass
+    written = None
+    cpus_detail_path = os.path.join(
+        os.path.dirname(detail_path), f"BENCH_DETAIL_sf{sf_val}_c{cpus}.json"
+    )
+    try:
+        with open(cpus_detail_path, "w") as fh:
+            json.dump(verbose, fh, indent=2)
+        written = os.path.basename(cpus_detail_path)
+    except OSError:
+        pass
+    if sf_val == sf_of_record and (prev_cpus is None or prev_cpus == cpus):
+        try:
+            with open(detail_path, "w") as fh:
+                json.dump(verbose, fh, indent=2)
+            written = os.path.basename(detail_path)
+        except OSError:
+            pass
+    return written
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -713,39 +750,11 @@ def main() -> None:
     # long lines. A non-comparable (loaded-host) run must NOT become the
     # next run's regression baseline.
     print(json.dumps(verbose))
-    detail_written = None
-    # scale-factor guard (same failure class as the c8 overwrite): a
-    # verify/debug run at another SF must not clobber the sf-of-record
-    # receipts. The SF of record is whatever the main detail file was
-    # taken at; with no main detail any SF may establish it.
-    sf_of_record = sf_val
-    try:
-        with open(detail_path) as fh:
-            sf_of_record = json.load(fh).get("sf", sf_val)
-    except (OSError, ValueError):
-        pass
-    if comparable and sf_val == sf_of_record:
-        # per-core-count detail is ALWAYS written (r12 VERDICT item 7:
-        # the c8 scaling run overwrote the c32 detail and erased the
-        # per-query scaling evidence); the consecutive-run baseline file
-        # is only refreshed by a run at ITS core count.
-        cpus_detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_DETAIL_c%d.json" % cpus,
-        )
-        try:
-            with open(cpus_detail_path, "w") as fh:
-                json.dump(verbose, fh, indent=2)
-            detail_written = os.path.basename(cpus_detail_path)
-        except OSError:
-            pass
-        if prev_cpus is None or prev_cpus == cpus:
-            try:
-                with open(detail_path, "w") as fh:
-                    json.dump(verbose, fh, indent=2)
-                detail_written = os.path.basename(detail_path)
-            except OSError:
-                pass
+    detail_written = (
+        write_detail(verbose, detail_path, sf_val, cpus, prev_cpus)
+        if comparable
+        else None
+    )
     # Surface the last committed full-registry oracle_check summary so
     # the uncapped correctness counts ride along in the recorded bench
     # artifact (VERDICT r3 item 7: externally record the full-registry

@@ -189,3 +189,27 @@ def test_calibration_probe_is_fixed_work():
     b = bench.calibration_probe()
     assert a > 0 and b > 0
     assert max(a, b) / min(a, b) < 1.3
+
+
+def test_detail_at_other_sf_writes_only_its_own_receipt(tmp_path):
+    # a comparable run at a non-record SF still leaves its per-SF,
+    # per-core-count receipt, and never touches the main baseline
+    import json
+
+    main = tmp_path / "BENCH_DETAIL.json"
+    main.write_text(json.dumps({"sf": 0.1, "cpus": 8, "value": 300.0}))
+    before = main.read_text()
+    written = bench.write_detail(
+        {"sf": 0.01, "cpus": 8, "value": 40.0}, str(main), 0.01, 8, 8
+    )
+    assert written == "BENCH_DETAIL_sf0.01_c8.json"
+    assert json.loads((tmp_path / written).read_text())["value"] == 40.0
+    assert main.read_text() == before
+
+    # at the SF and core count of record the baseline is refreshed too
+    written = bench.write_detail(
+        {"sf": 0.1, "cpus": 8, "value": 290.0}, str(main), 0.1, 8, 8
+    )
+    assert written == "BENCH_DETAIL.json"
+    assert json.loads(main.read_text())["value"] == 290.0
+    assert (tmp_path / "BENCH_DETAIL_sf0.1_c8.json").exists()

@@ -1,5 +1,6 @@
 """Property tests for the cross-engine primitives: the overflow-safe
-Knuth hash (split-multiply) and the pure-Python PPM codec."""
+Knuth hash (split-multiply), the md5-derived portable hash, and the
+pure-Python PPM codec."""
 
 from __future__ import annotations
 
@@ -31,6 +32,32 @@ def test_knuth_hash_matches_bignum_reference_across_int64(spark):
     for k in keys:
         expect = ((k % SPLIT_MOD) * _KNUTH) % SPLIT_MOD
         assert got[k] == expect, (k, got[k], expect)
+
+
+def test_portable_hash64_matches_duckdb(spark):
+    """Spark's ``portable_hash64`` and DuckDB's ``_portable_hash_sql``
+    agree bit for bit over the UTF-8 bytes of each string: the MinHash
+    pipelines, the persisted store and their oracles all rely on it."""
+    import duckdb
+
+    from ytspark.operators.dedup import _portable_hash_sql, portable_hash64
+
+    texts = [
+        "", "a", "hello world", "é", "日本語 テキスト",
+        "  two  spaces ", " ", "tab\tand\nnewline", "naïve café ☕",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, s string")
+    got = dict(df.select("i", portable_hash64(df["s"]).alias("h")).collect())
+    con = duckdb.connect()
+    want = dict(
+        con.execute(
+            f"SELECT i, {_portable_hash_sql('s')} FROM "
+            "(SELECT UNNEST(RANGE(?)) AS i, UNNEST(?::VARCHAR[]) AS s)",
+            [len(texts), texts],
+        ).fetchall()
+    )
+    assert got == want
+    assert len(set(got.values())) == len(texts)  # no accidental constant
 
 
 @settings(max_examples=200, deadline=None)

@@ -27,8 +27,9 @@ def test_rotated_out_queries_remain_registered():
     committed driver-pass record rather than hardcoded, so it tracks
     every rotation automatically — any name the driver ever certified
     that later disappears from the registry fails here, whichever
-    round rotated it out."""
-    from tools.check_priority_window import _ever_driver_checked
+    round rotated it out. A name retired on purpose is listed in
+    RETIRED with the registered query that now computes its result."""
+    from tools.check_priority_window import RETIRED, _ever_driver_checked
 
     reg = registry()
     rotated_out = _ever_driver_checked() - set(_PRIORITY)
@@ -36,10 +37,12 @@ def test_rotated_out_queries_remain_registered():
         "no driver-certified names outside the window — either the "
         "pass record is unreadable or rotation never happened"
     )
-    vanished = sorted(n for n in rotated_out if n not in reg)
+    vanished = sorted(n for n in rotated_out if n not in reg and n not in RETIRED)
     assert not vanished, (
         f"driver-certified queries vanished from the registry: {vanished}"
     )
+    for old, successor in RETIRED.items():
+        assert old not in reg and successor in reg, (old, successor)
 
 
 def test_window_rotation_stamp_is_current():

@@ -1,9 +1,9 @@
 """Streaming incremental dedup: the registered query is hash-certified
 against a batch-collapse DuckDB oracle (round 4); this test covers the
-function-level store lifecycle with the PRODUCTION xxhash64 hash family
-— the foreachBatch stream must produce exactly the pairs that
-sequential batch ticks over the same slices produce — plus the
-within-batch pairing the certified query relies on."""
+function-level store lifecycle — the foreachBatch stream must produce
+exactly the pairs that sequential batch ticks over the same slices
+produce — plus the within-batch pairing the certified query relies on,
+and that the store holds the same band rows as ``minhash_pairs``."""
 
 from __future__ import annotations
 
@@ -17,7 +17,9 @@ from pyspark.sql import functions as F
 
 from ytspark.operators.dedup import (
     INCR_SPLIT,
+    _minhash_bands_cte,
     incremental_minhash_dedup,
+    minhash_pairs,
     persist_minhash_store,
 )
 from ytspark.session import load_tables
@@ -103,7 +105,7 @@ def test_within_batch_pairing_catches_same_tick_dups(spark, tmp_path):
         "doc_id bigint, text string",
     )
     path = str(tmp_path / "wb_store")
-    persist_minhash_store(corpus, path, checkable=True)
+    persist_minhash_store(corpus, path)
     batch = spark.createDataFrame(
         [(10, base + "tail one"), (11, base + "tail two"),
          (12, "novel body of words nothing alike " * 7)],
@@ -112,14 +114,13 @@ def test_within_batch_pairing_catches_same_tick_dups(spark, tmp_path):
     without = {
         (r.new_doc_id, r.existing_doc_id)
         for r in incremental_minhash_dedup(
-            spark, batch, path, threshold=0.2, append=False, checkable=True
+            spark, batch, path, threshold=0.2, append=False
         ).collect()
     }
     with_wb = {
         (r.new_doc_id, r.existing_doc_id)
         for r in incremental_minhash_dedup(
-            spark, batch, path, threshold=0.2, append=False,
-            checkable=True, within_batch=True,
+            spark, batch, path, threshold=0.2, append=False, within_batch=True
         ).collect()
     }
     assert (11, 10) not in without  # store join alone misses same-tick
@@ -136,18 +137,16 @@ def test_sink_fn_mode_matches_default_mode(spark, sf_dir, fresh_dirs):
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     corpus = docs.where(F.col("doc_id") < INCR_SPLIT)
     batch = docs.where(F.col("doc_id") >= INCR_SPLIT)
-    persist_minhash_store(corpus, store_a, checkable=True)
-    persist_minhash_store(corpus, store_b, checkable=True)
+    persist_minhash_store(corpus, store_a)
+    persist_minhash_store(corpus, store_b)
     default_pairs = _normalized(
         incremental_minhash_dedup(
-            spark, batch, store_a, threshold=0.2, append=True,
-            checkable=True, within_batch=True,
+            spark, batch, store_a, threshold=0.2, append=True, within_batch=True
         )
     )
     sink = stage + "_sink"
     ret = incremental_minhash_dedup(
-        spark, batch, store_b, threshold=0.2, append=True,
-        checkable=True, within_batch=True,
+        spark, batch, store_b, threshold=0.2, append=True, within_batch=True,
         sink_fn=lambda pairs: pairs.write.mode("append").parquet(sink),
     )
     assert ret is None  # caller owns the sink in this mode
@@ -169,6 +168,56 @@ def test_sink_fn_mode_matches_default_mode(spark, sf_dir, fresh_dirs):
         assert store_rows(store_a, sub, cols) == store_rows(
             store_b, sub, cols
         )
+
+
+def test_store_bands_are_the_pair_join_bands(spark, sf_dir, tmp_path):
+    """The persisted store holds exactly the (doc_id, band_id,
+    band_hash) rows ``minhash_pairs`` joins on — the rows the DuckDB
+    replay of dedup_minhash_lsh computes — so a store-mediated tick and
+    a batch recompute block on the same LSH buckets."""
+    import duckdb
+
+    docs = load_tables(spark, sf_dir, "documents")["documents"].where(
+        F.col("doc_id") < 120
+    )
+    path = str(tmp_path / "store")
+    persist_minhash_store(docs, path)
+    stored_df = spark.read.parquet(path + "/bands")
+    stored = sorted(
+        map(tuple, stored_df.select("doc_id", "band_id", "band_hash").collect())
+    )
+
+    con = duckdb.connect()
+    con.register("documents", docs.select("doc_id", "text").toPandas())
+    replay = sorted(
+        con.execute(
+            f"WITH {_minhash_bands_cte()} "
+            "SELECT doc_id, band_id, band_hash FROM bands"
+        ).fetchall()
+    )
+    assert stored == replay and stored
+
+    # the store's band collisions are the candidate set minhash_pairs
+    # scores (threshold 0: every banded candidate survives)
+    a, b = stored_df.alias("a"), stored_df.alias("b")
+    collided = {
+        tuple(r)
+        for r in a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select("a.doc_id", "b.doc_id")
+        .collect()
+    }
+    pairs = {
+        tuple(r)
+        for r in minhash_pairs(docs, threshold=0.0)
+        .select("doc_a", "doc_b")
+        .collect()
+    }
+    assert collided == pairs and pairs
 
 
 def test_registered_query_is_deterministic(spark, sf_dir):

@@ -44,6 +44,15 @@ import sys
 
 WINDOW = 50
 
+# Driver-certified names deliberately removed from the registry, each
+# mapped to the registered query that now computes the same result.
+# The MinHash "checkable" twins became identical to the main queries
+# once the store and the eval queries moved onto portable_hash64.
+RETIRED = {
+    "dedup_minhash_lsh_checkable": "dedup_minhash_lsh",
+    "dedup_minhash_clusters_checkable": "dedup_minhash_clusters",
+}
+
 
 def _correctness_files() -> list[str]:
     """Committed CORRECTNESS_r*.json paths (git-tracked), so an

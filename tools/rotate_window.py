@@ -10,8 +10,7 @@ The external driver certifies the FIRST 50 entries of
                   committed CORRECTNESS_r*.json (pass = rows_match and
                   hash_match true, err null — r10 ADVICE), oracle-backed
                   only (a no-oracle query can never convert a window
-                  slot into a pass; the three hash-seeded rows-only
-                  signatures are certified via their _checkable twins).
+                  slot into a pass).
 
 Pick order (all deterministic):
   1. repairs — names with a FAILED driver entry on record (they pass

@@ -47,7 +47,7 @@ def register(
 # operator family in that window — reference pipeline, events
 # analytics, joins/set-ops/rollup/grouping/pivot/windows, the
 # Python-kernel matrix, temporal joins, dedup (incl. the incremental
-# store and the hash-certified checkable variants), similarity,
+# store), similarity,
 # curation safety, text, multimodal, streaming — so the gate exercises
 # the breadth of the engine rather than 50 near-duplicate relational
 # variants. Round 3 rotated 10 near-duplicate/already-certified entries
@@ -206,8 +206,7 @@ def register(
 # r10 ADVICE tightened 'driver-checked' to rows+hash-pass with err
 # null, which returns the four only-ever-FAILED names to the backlog;
 # 99 are oracle-backed — the three hash-seeded rows-only signatures
-# can never convert a slot into a pass and are certified via their
-# _checkable twins). The one repeat anchor is the flagship, then 49
+# could never convert a slot into a pass). The one repeat anchor is the flagship, then 49
 # FIRST-EVERS: the two repaired r01 hash-failures first
 # (events_json_props, q12_late_lines_by_class — both 414/414 green in
 # the local multi-SF sweep since), then the two heavy families the r10

@@ -402,9 +402,9 @@ from ytspark.operators.dedup import _streaming_incremental_oracle
     "streaming_incremental_dedup",
     oracle=_streaming_incremental_oracle(),
     doc="The 100 TB ingest-cadence dedup shape END TO END in streaming "
-        "form: the corpus MinHash store bootstraps once (checkable "
-        "hash family), then a document stream (file source, one "
-        "micro-batch per file) runs incremental_minhash_dedup inside "
+        "form: the corpus MinHash store bootstraps once (the hash "
+        "family of dedup_minhash_lsh), then a document stream (file "
+        "source, one micro-batch per file) runs incremental_minhash_dedup inside "
         "foreachBatch — each tick signatures only its own batch, "
         "LSH-joins the stored band table at O(batch + candidates), "
         "pairs the batch against ITSELF too (within_batch=True, so "
@@ -457,9 +457,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.6).
     batch = docs.where(F.col("doc_id") >= INCR_SPLIT)
     concurrent_jobs(
-        lambda: persist_minhash_store(
-            docs.where(F.col("doc_id") < INCR_SPLIT), store, checkable=True
-        ),
+        lambda: persist_minhash_store(docs.where(F.col("doc_id") < INCR_SPLIT), store),
         lambda: batch.repartitionByRange(4, "doc_id").write.parquet(stage),
     )
     schema = spark.read.parquet(stage).schema
@@ -470,7 +468,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two store appends run overlapped after it
         incremental_minhash_dedup(
             spark, batch_df, store, threshold=INCR_THRESHOLD, append=True,
-            checkable=True, within_batch=True,
+            within_batch=True,
             sink_fn=lambda pairs: pairs.select(
                 F.least("new_doc_id", "existing_doc_id").alias("doc_lo"),
                 F.greatest("new_doc_id", "existing_doc_id").alias("doc_hi"),
