@@ -395,9 +395,7 @@ def minhash_shingle_hashes(docs: DataFrame) -> DataFrame:
 
 
 def minhash_signatures_df(
-    docs: DataFrame,
-    n_perm: int = N_PERMUTATIONS,
-    hashes: DataFrame | None = None,
+    docs: DataFrame, hashes: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, sig array<bigint>) via explode + grouped min aggregates.
 
@@ -408,7 +406,7 @@ def minhash_signatures_df(
     and get no common-subexpression elimination, so an array-HOF
     formulation re-evaluates the tokenize→shingle→hash subtree once per
     permutation (measured 96 s at sf0.1). This formulation explodes the
-    base hashes once and computes the n_perm affine minima as ordinary
+    base hashes once and computes the N_PERMUTATIONS affine minima as ordinary
     codegen'd MIN aggregates with map-side partials — one shuffle keyed
     on doc_id, rows = total shingles, all JVM codegen (~30× faster;
     same plan shape SimHash uses).
@@ -428,11 +426,11 @@ def minhash_signatures_df(
                     F.lit(_M31),
                 )
             ).alias(f"m{i}")
-            for i in range(n_perm)
+            for i in range(N_PERMUTATIONS)
         ]
     )
     return mins.select(
-        "doc_id", F.array(*[F.col(f"m{i}") for i in range(n_perm)]).alias("sig")
+        "doc_id", F.array(*[F.col(f"m{i}") for i in range(N_PERMUTATIONS)]).alias("sig")
     )
 
 
